@@ -197,8 +197,9 @@ def _sql_udf_defs() -> list[tuple[str, str]]:
 
 def _grouped_by_scalar(values: pd.Series, scalar: pd.Series, fn):
     """Run a (vectorized-values, python-int) kernel once per distinct
-    scalar value in the batch — lets level/precision be a real column."""
-    out = np.zeros(len(values), dtype=np.int64)
+    scalar value in the batch — lets level/precision be a real column.
+    A NULL level/precision yields NULL (SQL semantics), not cell 0."""
+    out = pd.Series(pd.NA, index=values.index, dtype="Int64")
     sc = scalar.to_numpy()
     for v in pd.unique(scalar.dropna()):
         mask = sc == v

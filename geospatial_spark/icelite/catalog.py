@@ -10,17 +10,23 @@ to ``spark.read.format("iceberg")`` + a real metrics table untouched.
 
 Layout::
 
-    {root}/{table}/data/pid={P}/*.parquet      -- partition P's rows
+    {root}/{table}/data/__batch={B}/__pid={P}/*.parquet  -- batch B, partition P
     {root}/{table}/metadata/v{N}.json          -- snapshot manifest
     {root}/{table}/metadata/VERSION            -- atomic pointer (rename swap)
 
 Manifest: schema DDL + one record per committed partition
-(partition_id, row_count, key_min, key_max, checksum, committed_at).
+(partition_id, pid, batch, row_count, key_min, key_max, checksum,
+committed_at).
 
-Commit protocol: partitions are written in batches; after each batch the
-new manifest is written to a temp file and ``os.rename``-swapped — a kill
-between batches loses at most the in-flight batch, and a rerun skips every
-partition already in the manifest (resume = anti-join on partition_id).
+Commit protocol: ONE commit core (``_commit``) behind all three writers —
+``write_partitioned`` (resumable batches), ``append_batch`` (idempotent
+streaming micro-batches) and ``rewrite_files`` (compaction) keep only
+their own policy.  Each commit writes a fresh ``__batch=`` directory,
+reads its stats back, checks row conservation, and CAS-swaps the new
+manifest (temp file + ``os.rename``) — a kill between batches loses at
+most the in-flight batch, and a rerun skips every partition already in
+the manifest (resume = anti-join on partition_id).  ``FAULT_HOOK`` is the
+one crash-injection seam for tests.
 
 Scale notes: each batch is one distributed filter+write job over only that
 batch's partitions (partition pruning on the hash key), plus one partial-agg
@@ -38,7 +44,7 @@ import time
 import uuid
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
@@ -118,30 +124,61 @@ def _writer_kind(man: dict[str, Any]) -> str:
     return "batch"
 
 
-def _committed_batch_pid_filter(man: dict[str, Any]):
-    """Reader-side committed-data predicate: OR over batches of
-    ``(__batch == b) & __pid.isin(raw pids of b)``.  The round-4 reader
-    filtered ``__pid.isin(all partition_ids)`` — but ``partition_id`` is a
-    NAMESPACED lineage key for appended batches (version*n + pid) while
-    the parquet files carry the raw ``__pid``, so any appended batch
-    writing a pid the version-0 batch did not cover was silently dropped
-    (round-4 advice, high).  Both ``__batch`` and ``__pid`` are partition
-    columns, so the disjunction of conjunctions still prunes at
-    file-listing time.  Returns None when no batch has data."""
-    n = man["n_partitions"]
+def _scan(
+    spark: SparkSession, root: str, table: str, pairs: list[tuple[int, str]]
+) -> DataFrame | None:
+    """Committed rows of the given (raw ``__pid``, batch) pairs, still
+    carrying the ``__batch``/``__pid`` columns.  Reads ONLY the listed
+    batches' ``__batch=`` directories (``basePath`` keeps both as partition
+    columns): an orphan or a concurrent writer's in-flight directory —
+    possibly holding a half-written file — is never listed, so it can
+    neither fail nor leak into a read of a healthy table.  The filter then
+    pairs each batch with ITS raw pids: ``partition_id`` is a NAMESPACED
+    lineage key for appended batches (version*n + pid) while the files
+    carry the raw ``__pid``, and distinct batches reuse pid values (the
+    round-4 reader's flat ``__pid.isin(partition_ids)`` silently dropped
+    appended batches — advice, high).  Both are partition columns, so the
+    disjunction of conjunctions prunes at file-listing time.  None when no
+    listed batch has files (an empty micro-batch commits its tag but
+    writes none)."""
+    dd = _data_dir(root, table)
     by_batch: dict[str, set[int]] = {}
-    for rec in man["partitions"]:
-        b = rec.get("batch")
-        if not b:
-            continue
-        by_batch.setdefault(b, set()).add(_rec_pid(rec, n))
+    for p, b in pairs:
+        if b:
+            by_batch.setdefault(b, set()).add(p)
+    dirs = sorted(b for b in by_batch if os.path.isdir(f"{dd}/__batch={b}"))
+    if not dirs:
+        return None
     cond = None
-    for b in sorted(by_batch):
-        c = (F.col("__batch") == b) & F.col("__pid").isin(
-            sorted(by_batch[b])
-        )
+    for b in dirs:
+        c = (F.col("__batch") == b) & F.col("__pid").isin(sorted(by_batch[b]))
         cond = c if cond is None else (cond | c)
-    return cond
+    paths = [f"{dd}/__batch={b}" for b in dirs]
+    return spark.read.option("basePath", dd).parquet(*paths).filter(cond)
+
+
+def _all_pairs(man: dict[str, Any]) -> list[tuple[int, str]]:
+    n = man["n_partitions"]
+    return [(_rec_pid(rec, n), rec.get("batch")) for rec in man["partitions"]]
+
+
+def _read_manifest(root: str, table: str, as_of: int | None) -> dict[str, Any]:
+    """The head manifest, or snapshot ``as_of``'s; raises if none."""
+    man = (
+        current_manifest(root, table)
+        if as_of is None
+        else manifest_at(root, table, as_of)
+    )
+    if man is None:
+        raise FileNotFoundError(f"no committed manifest for {table} under {root}")
+    return man
+
+
+def _empty(spark: SparkSession, man: dict[str, Any]) -> DataFrame:
+    """Schema-stable empty result straight from the manifest."""
+    from pyspark.sql.types import StructType
+
+    return spark.createDataFrame([], StructType.fromDDL(man["schema"]))
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -194,30 +231,228 @@ def _swap_manifest(
             fcntl.flock(lock, fcntl.LOCK_UN)
 
 
-def _batch_stats(df: DataFrame, key_col: str, batch_dir: str) -> list:
-    """Per-partition lineage stats by READING BACK the files just written
-    (not by re-evaluating the input lineage): read_range treats (key_min,
-    key_max) as a correctness-bearing pruning index, and a
-    nondeterministic source re-evaluated for a second stats job could
-    record bounds that disagree with the committed data — silently
-    dropping rows from pruned reads.  The read-back scans only this
-    batch's directory (freshly written, page-cache warm).  Empty batch
-    (partitionBy wrote no files) → []."""
-    if not os.path.isdir(batch_dir):
-        return []
-    written = df.sparkSession.read.parquet(batch_dir)
-    return (
-        written.groupBy("__pid")
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.min(F.col(key_col).cast("bigint")).alias("key_min"),
-            F.max(F.col(key_col).cast("bigint")).alias("key_max"),
-            F.expr("bit_xor(xxhash64(" + ", ".join(df.columns) + "))").alias(
-                "checksum"
-            ),
-        )
-        .collect()
+#: Crash-injection seam (``None`` in production).  Tests set it (with
+#: ``monkeypatch``) to a callable ``FAULT_HOOK(point, table, tag)``; a hook
+#: that raises simulates a kill of the writer at that point of the commit
+#: core, for every writer alike:
+#:
+#:   * ``"before_write"`` — nothing of this commit is on disk yet;
+#:   * ``"after_write"``  — data files written, manifest not swapped: the
+#:     batch directory is an orphan no reader sees and the next writer GCs;
+#:   * ``"after_swap"``   — committed, but the caller never hears back.
+FAULT_HOOK: Callable[[str, str, str], None] | None = None
+
+
+def _fault(point: str, table: str, tag: str) -> None:
+    if FAULT_HOOK is not None:
+        FAULT_HOOK(point, table, tag)
+
+
+def _quote(col: str) -> str:
+    return "`" + col.replace("`", "``") + "`"
+
+
+def _stats_aggs(cols: list[str], key_col: str) -> list:
+    """The per-partition lineage stats (row_count, key bounds, xor
+    checksum) — the ONE definition both the commit read-back and
+    ``verify_table`` use, so the committed and the audited expressions are
+    identical by construction.  Every column is backtick-quoted (a data
+    column named ``doc-id`` must not parse as a subtraction).  The checksum
+    is an order-insensitive ``bit_xor(xxhash64(...))`` over the DATA
+    columns in file-schema order (xxhash64 is column-order sensitive;
+    ``__batch``/``__pid`` are directory-derived, not data)."""
+    key = F.col(_quote(key_col)).cast("bigint")
+    return [
+        F.count(F.lit(1)).alias("row_count"),
+        F.min(key).alias("key_min"),
+        F.max(key).alias("key_max"),
+        F.expr(
+            "bit_xor(xxhash64(" + ", ".join(_quote(c) for c in cols) + "))"
+        ).alias("checksum"),
+    ]
+
+
+def _new_manifest(
+    table: str,
+    df: DataFrame,
+    *,
+    stage: str,
+    key_col: str,
+    n_partitions: int,
+    range_bounds: list[int] | None,
+    writer: str,
+) -> dict[str, Any]:
+    return {
+        "table": table,
+        "schema": df.schema.simpleString(),
+        "stage": stage,
+        "key_col": key_col,
+        "n_partitions": n_partitions,
+        "version": 0,
+        "range_bounds": range_bounds,
+        "writer": writer,
+        "partitions": [],
+    }
+
+
+def _check_compatible(
+    man: dict[str, Any],
+    table: str,
+    df: DataFrame,
+    *,
+    key_col: str,
+    n_partitions: int | None,
+    verb: str,
+) -> None:
+    """The committed layout is the only valid one for further writes:
+    proceeding with a different key or partition count would assign rows
+    under a partitioning inconsistent with the committed files (round-2
+    advice; for appends the partition_id namespace is version*n + pid, so
+    mixed widths would interleave ids across batches).  Schema drift would
+    land mixed-schema parquet under one table, and the scan's inferred
+    schema would then depend on which footer Spark samples — columns
+    silently null out or vanish.  icelite does NOT do Iceberg-style schema
+    evolution; it fails loudly instead (documented divergence).
+    ``n_partitions=None`` skips the width check (range tables derive it
+    from the committed bounds)."""
+    for field, got, committed in (
+        ("key_col", key_col, man.get("key_col")),
+        ("schema", df.schema.simpleString(), man["schema"]),
+        ("n_partitions", n_partitions, man["n_partitions"]),
+    ):
+        if got is not None and got != committed:
+            raise ValueError(
+                f"{verb} table {table!r} with {field}={got!r} but manifest "
+                f"committed {field}={committed!r}"
+                + ("; icelite tables are schema-frozen" if field == "schema" else "")
+            )
+
+
+def _commit(
+    df: DataFrame,
+    root: str,
+    table: str,
+    base: dict[str, Any],
+    *,
+    tag: str,
+    stage: str,
+    pids: list[int] | None = None,
+    arrange: Callable[[DataFrame], DataFrame] | None = None,
+    expected_rows: int | None = None,
+) -> dict[str, Any]:
+    """The one icelite commit: write ``df``'s rows (only partitions
+    ``pids`` when given) into a FRESH ``__batch=<tag>`` directory, read the
+    lineage stats back, check row conservation and CAS-swap ``base`` plus
+    this batch's partition records in as version+1.  Returns that manifest.
+
+    Crash atomicity: ``read_table`` scans ONLY manifest-listed batches, so
+    a kill between the data write and the manifest swap leaves an orphan
+    directory that no reader ever sees (and the next writer GCs).  The pid
+    is the hash ``pmod(xxhash64(key), n)`` or, when the manifest carries
+    ``range_bounds``, the RANGE bucket of the key — persisted bounds, so a
+    rerun whose recomputed bounds drift can never mis-assign rows relative
+    to committed partitions.  ``arrange`` reshapes the staged rows before
+    the write (compaction's repartition/sort).
+
+    The stats come from READING BACK the files just written, not from
+    re-evaluating the input lineage: read_range treats (key_min, key_max)
+    as a correctness-bearing pruning index, and a nondeterministic source
+    re-evaluated for a second stats job could record bounds that disagree
+    with the committed data.  Row conservation: the read-back total must
+    equal ``expected_rows`` (compaction: the base manifest's rows) or else
+    the rows the write consumed, counted by an ``Observation`` on the write
+    action itself (no extra job, no second evaluation).  Any loss — a
+    concurrent GC deleting the in-flight dir, a partial write, a
+    partitioning bug — aborts loudly instead of committing a manifest
+    that silently shrank the table.
+
+    Records: batch-mode tables record every pid the commit covers (empty
+    ones with row_count 0 and NULL bounds); append-mode tables record only
+    pids that hold rows, under namespaced ids ``version*n + pid``; a commit
+    with no rows at all still records its tag (one empty pid-0 record) so
+    a replay of it stays a no-op."""
+    n = base["n_partitions"]
+    key_col = base["key_col"]
+    bounds = base.get("range_bounds")
+    if bounds is None:
+        pid = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n))
+    else:
+        pid = F.lit(len(bounds))
+        for i in range(len(bounds) - 1, -1, -1):
+            pid = F.when(F.col(key_col) <= F.lit(bounds[i]), F.lit(i)).otherwise(pid)
+    staged = df.withColumn("__pid", pid.cast("int"))
+    if pids is not None:
+        staged = staged.filter(F.col("__pid").isin(pids))
+    # the literal __batch goes on ABOVE the observed node: the write's
+    # required (__batch, __pid) ordering is then still met by compaction's
+    # (__pid, key) sort, with no extra sort that would scramble the keys
+    obs = Observation()
+    staged = staged.observe(obs, F.count(F.lit(1)).alias("rows")).withColumn(
+        "__batch", F.lit(tag)
     )
+    if arrange is not None:
+        staged = arrange(staged)
+
+    _fault("before_write", table, tag)
+    _mark_inflight(root, table, tag)
+    staged.write.mode("append").partitionBy("__batch", "__pid").parquet(
+        _data_dir(root, table)
+    )
+    _fault("after_write", table, tag)
+    batch_dir = f"{_data_dir(root, table)}/__batch={tag}"
+    stats = (
+        df.sparkSession.read.parquet(batch_dir)
+        .groupBy("__pid")
+        .agg(*_stats_aggs(df.columns, key_col))
+        .collect()
+        if os.path.isdir(batch_dir)  # an empty write creates no directory
+        else []
+    )
+    got = sum(r["row_count"] for r in stats)
+    want = obs.get["rows"] if expected_rows is None else expected_rows
+    if got != want:
+        _clear_inflight(root, table, tag)
+        raise RuntimeError(
+            f"commit of batch {tag!r} to {table!r} read back {got} rows but "
+            f"{want} were written (base manifest v{base['version']}); "
+            "aborting without commit (row-conservation guard)"
+        )
+
+    by_pid = {int(r["__pid"]): r for r in stats}
+    if _writer_kind(base) == "append":
+        base_pid, covered = base["version"] * n, sorted(by_pid)
+    else:
+        base_pid, covered = 0, list(range(n) if pids is None else pids)
+    now = time.time()
+    recs = []
+    for p in covered or [0]:
+        r = by_pid.get(p)
+        recs.append(
+            {
+                "partition_id": base_pid + p,
+                "pid": p,
+                "batch": tag,
+                "row_count": r["row_count"] if r else 0,
+                "key_min": r["key_min"] if r else None,
+                "key_max": r["key_max"] if r else None,
+                "checksum": r["checksum"] if r else 0,
+                "stage": stage,
+                "committed_at": now,
+            }
+        )
+    man = dict(base, version=base["version"] + 1, partitions=base["partitions"] + recs)
+    # a conflicting concurrent commit raises ConcurrentCommitError: the
+    # batch dir becomes a plain orphan and the caller retries from the
+    # fresh manifest (a streaming restart replays the micro-batch, whose
+    # tag was never committed — exactly-once holds through the conflict)
+    try:
+        _swap_manifest(root, table, man, expected_version=base["version"] or None)
+    finally:
+        # committed (dir is live) or CAS-lost (dir is a plain orphan):
+        # either way the in-flight shield is no longer needed
+        _clear_inflight(root, table, tag)
+    _fault("after_swap", table, tag)
+    return man
 
 
 def write_partitioned(
@@ -229,8 +464,6 @@ def write_partitioned(
     key_col: str,
     n_partitions: int = 16,
     batch_size: int = 4,
-    fail_after_batches: int | None = None,
-    fail_mid_commit: int | None = None,
     range_bounds: list[int] | None = None,
 ) -> dict[str, Any]:
     """Resumably materialize ``df`` into ``root/table``.
@@ -241,22 +474,22 @@ def write_partitioned(
     contiguous and the per-partition (key_min, key_max) lineage doubles as
     a file-pruning index for cell-range predicates.
 
-    Skips partitions already committed (resume).  ``fail_after_batches``
-    injects a crash for the resume test.  Returns the final manifest.
-
-    Crash atomicity (round-1 advice): every batch attempt writes into a
-    FRESH ``__batch=<unique>`` subtree; the manifest records which batch
-    directory holds each committed partition and ``read_table`` scans ONLY
-    manifest-listed batches — a kill between the data write and the
-    manifest swap leaves an orphan directory that no reader ever sees (and
-    the next writer garbage-collects).  ``range_bounds`` are persisted in
-    the manifest and REUSED on resume, so a rerun whose recomputed bounds
-    drift can never mis-assign rows relative to committed partitions.
-    """
+    Partitions are committed ``batch_size`` at a time, each batch one
+    ``_commit`` (own ``__batch=b<version>-<uuid>`` directory, own
+    snapshot), and partitions already committed are skipped — a rerun
+    after a kill resumes from the last committed batch.  ``range_bounds``
+    are persisted in the manifest and REUSED on resume.  Returns the final
+    manifest."""
     _assert_local_root(root)
     man = current_manifest(root, table)
-    prev_version = None if man is None else man["version"]
-    if man is not None:
+    if man is None:
+        if range_bounds is not None:
+            n_partitions = len(range_bounds) + 1
+        man = _new_manifest(
+            table, df, stage=stage, key_col=key_col, n_partitions=n_partitions,
+            range_bounds=range_bounds, writer="batch",
+        )
+    else:
         # cross-mode guard (round-4 advice): a resume over an APPENDED
         # table would misread namespaced append partition_ids as its own
         # raw pids and silently skip those partitions forever
@@ -265,119 +498,27 @@ def write_partitioned(
                 f"table {table!r} was committed by append_batch "
                 "(streaming-append mode); write_partitioned cannot resume it"
             )
-        # resume guard (round-2 advice): the committed partitioning is the
-        # only valid one — silently proceeding with a different mode/bounds/
-        # partition count would assign remaining rows under a partitioning
-        # inconsistent with the committed files.
-        committed_key = man.get("key_col")
-        if committed_key is not None and committed_key != key_col:
+        hashed = man.get("range_bounds") is None
+        if hashed and range_bounds is not None:
             raise ValueError(
-                f"resume of table {table!r} with key_col={key_col!r} but "
-                f"manifest committed key_col={committed_key!r}"
+                f"resume of hash-partitioned table {table!r} with "
+                "range_bounds; the committed partitioning is hash"
             )
-        if df.schema.simpleString() != man["schema"]:
-            # a resume with a drifted schema would complete the remaining
-            # partitions under a DIFFERENT schema than the committed ones
-            raise ValueError(
-                f"resume of table {table!r} with schema "
-                f"{df.schema.simpleString()} but manifest committed "
-                f"{man['schema']}; icelite tables are schema-frozen"
-            )
-        committed_bounds = man.get("range_bounds")
-        if committed_bounds is not None:
-            # committed bounds win over recomputed/omitted bounds (a rerun
-            # whose recomputed bounds drift can never mis-assign rows
-            # relative to committed partitions)
-            range_bounds = committed_bounds
-        else:
-            if range_bounds is not None:
-                raise ValueError(
-                    f"resume of hash-partitioned table {table!r} with "
-                    "range_bounds; the committed partitioning is hash"
-                )
-            if n_partitions != man["n_partitions"]:
-                raise ValueError(
-                    f"resume of table {table!r} with n_partitions="
-                    f"{n_partitions} but manifest committed "
-                    f"{man['n_partitions']} partitions"
-                )
-    if range_bounds is not None:
-        n_partitions = len(range_bounds) + 1
-        pid_expr = F.lit(len(range_bounds))
-        for i in range(len(range_bounds) - 1, -1, -1):
-            pid_expr = F.when(
-                F.col(key_col) <= F.lit(range_bounds[i]), F.lit(i)
-            ).otherwise(pid_expr)
-        pid = pid_expr.cast("int")
-    else:
-        pid = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_partitions)).cast("int")
-    staged = df.withColumn("__pid", pid)
-
-    done = committed_partitions(root, table)
-    todo = [p for p in range(n_partitions) if p not in done]
-    if man is None:
-        man = {
-            "table": table,
-            "schema": df.schema.simpleString(),
-            "stage": stage,
-            "key_col": key_col,
-            "n_partitions": n_partitions,
-            "version": 0,
-            "range_bounds": range_bounds,
-            "writer": "batch",
-            "partitions": [],
-        }
+        # committed range bounds win over recomputed/omitted ones
+        _check_compatible(
+            man, table, df, key_col=key_col,
+            n_partitions=n_partitions if hashed else None, verb="resume of",
+        )
     _gc_orphan_batches(root, table, man, own_prefixes=("b",))
 
-    batches = [todo[i : i + batch_size] for i in range(0, len(todo), batch_size)]
-    for bi, batch in enumerate(batches):
-        if fail_after_batches is not None and bi >= fail_after_batches:
-            raise RuntimeError(f"injected failure before batch {bi} (resume test)")
-        bname = f"b{man['version'] + 1}-{uuid.uuid4().hex[:8]}"
-        part = staged.filter(F.col("__pid").isin(batch)).withColumn(
-            "__batch", F.lit(bname)
+    done = {rec["partition_id"] for rec in man["partitions"]}
+    todo = [p for p in range(man["n_partitions"]) if p not in done]
+    for i in range(0, len(todo), batch_size):
+        man = _commit(
+            df, root, table, man,
+            tag=f"b{man['version'] + 1}-{uuid.uuid4().hex[:8]}",
+            stage=stage, pids=todo[i : i + batch_size],
         )
-        _mark_inflight(root, table, bname)
-        (
-            part.write.mode("append")
-            .partitionBy("__batch", "__pid")
-            .parquet(_data_dir(root, table))
-        )
-        if fail_mid_commit is not None and bi >= fail_mid_commit:
-            # crash INSIDE the commit window: data written, manifest not yet
-            # swapped — the batch dir is an orphan the resume must ignore
-            raise RuntimeError(
-                f"injected failure after data write of batch {bi}, before "
-                "manifest swap (crash-window resume test)"
-            )
-        stats = _batch_stats(
-            df, key_col, f"{_data_dir(root, table)}/__batch={bname}"
-        )
-        now = time.time()
-        by_pid = {r["__pid"]: r for r in stats}
-        for p in batch:
-            r = by_pid.get(p)
-            man["partitions"].append(
-                {
-                    "partition_id": p,
-                    "pid": p,
-                    "batch": bname,
-                    "row_count": r["row_count"] if r else 0,
-                    "key_min": r["key_min"] if r else None,
-                    "key_max": r["key_max"] if r else None,
-                    "checksum": r["checksum"] if r else 0,
-                    "stage": stage,
-                    "committed_at": now,
-                }
-            )
-        man["version"] += 1
-        try:
-            _swap_manifest(root, table, man, expected_version=prev_version)
-        finally:
-            # committed (dir is live) or CAS-lost (dir is a plain orphan):
-            # either way the in-flight shield is no longer needed
-            _clear_inflight(root, table, bname)
-        prev_version = man["version"]
     return man
 
 
@@ -390,7 +531,6 @@ def append_batch(
     key_col: str,
     n_partitions: int = 16,
     batch_tag: str,
-    fail_before_swap: bool = False,
 ) -> dict[str, Any]:
     """IDEMPOTENT append of one tagged batch — the icelite half of an
     exactly-once streaming sink (streaming/sink.py): the caller derives
@@ -404,21 +544,25 @@ def append_batch(
     never swapped) is an orphan: the normal GC removes it before the
     rewrite, so a retry can never double its rows.  Partition ids are
     namespaced per batch (manifest record keys are (batch_tag, pid));
-    ``read_table``/``lineage`` work unchanged.  ``fail_before_swap``
-    injects the crash for tests."""
+    ``read_table``/``lineage`` work unchanged."""
     _assert_local_root(root)
     if "/" in batch_tag or "=" in batch_tag:
         raise ValueError(f"invalid batch_tag {batch_tag!r}")
     man = current_manifest(root, table)
-    prev_version = None if man is None else man["version"]
-    if man is not None:
-        if any(rec.get("batch") == batch_tag for rec in man["partitions"]):
-            return man  # replayed batch — already committed, exactly-once
-        if batch_tag in man.get("retired_batches", []):
-            # the batch was committed and later COMPACTED away
-            # (rewrite_files): its rows live on in the compacted files, so
-            # a checkpoint replay must stay a no-op — re-appending would
-            # double them (the replay-after-compaction hazard)
+    if man is None:
+        man = _new_manifest(
+            table, df, stage=stage, key_col=key_col, n_partitions=n_partitions,
+            range_bounds=None, writer="append",
+        )
+    else:
+        # a replayed batch is already committed (exactly-once); a RETIRED
+        # one was committed and later compacted away (rewrite_files): its
+        # rows live on in the compacted files, so re-appending would
+        # double them (the replay-after-compaction hazard).  Replays never
+        # write, so they run before the guards on purpose.
+        if batch_tag in man.get("retired_batches", []) or any(
+            rec.get("batch") == batch_tag for rec in man["partitions"]
+        ):
             return man
         if _writer_kind(man) != "append":
             # cross-mode guard (round-4 advice): appending to a
@@ -429,109 +573,14 @@ def append_batch(
                 f"table {table!r} was committed by write_partitioned "
                 "(batch mode); append_batch cannot extend it"
             )
-        if man.get("range_bounds") is not None:
-            raise ValueError(
-                f"table {table!r} is range-partitioned; append_batch "
-                "supports hash partitioning only"
-            )
-        if man.get("key_col") != key_col:
-            raise ValueError(
-                f"append to table {table!r} with key_col={key_col!r} but "
-                f"manifest committed key_col={man.get('key_col')!r}"
-            )
-        if df.schema.simpleString() != man["schema"]:
-            # schema drift guard: mixed-schema batch dirs under one table
-            # make the parquet scan's inferred schema depend on which file
-            # footer Spark samples — columns silently null out or vanish.
-            # This catalog does NOT do Iceberg-style schema evolution;
-            # fail loudly instead (documented divergence).
-            raise ValueError(
-                f"append to table {table!r} with schema "
-                f"{df.schema.simpleString()} but manifest committed "
-                f"{man['schema']}; icelite tables are schema-frozen"
-            )
-        if n_partitions != man["n_partitions"]:
-            # the per-batch partition_id namespace is version*n_partitions
-            # + pid — mixed widths would interleave ids across batches
-            raise ValueError(
-                f"append to table {table!r} with n_partitions="
-                f"{n_partitions} but manifest committed "
-                f"{man['n_partitions']}"
-            )
-    else:
-        man = {
-            "table": table,
-            "schema": df.schema.simpleString(),
-            "stage": stage,
-            "key_col": key_col,
-            "n_partitions": n_partitions,
-            "version": 0,
-            "range_bounds": None,
-            "writer": "append",
-            "partitions": [],
-        }
+        _check_compatible(
+            man, table, df, key_col=key_col, n_partitions=n_partitions,
+            verb="append to",
+        )
     # removes THIS tag's crashed try too (own prefix = the exact tag; other
     # streaming tags' in-flight dirs stay shielded by their markers)
     _gc_orphan_batches(root, table, man, own_prefixes=(batch_tag,))
-
-    pid = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_partitions)).cast("int")
-    staged = df.withColumn("__pid", pid).withColumn("__batch", F.lit(batch_tag))
-    _mark_inflight(root, table, batch_tag)
-    (
-        staged.write.mode("append")
-        .partitionBy("__batch", "__pid")
-        .parquet(_data_dir(root, table))
-    )
-    if fail_before_swap:
-        raise RuntimeError(
-            f"injected failure after data write of batch {batch_tag!r}, "
-            "before manifest swap (exactly-once crash-window test)"
-        )
-    # empty micro-batch → [] — still commits the tag below (replay skip)
-    stats = _batch_stats(
-        df, key_col, f"{_data_dir(root, table)}/__batch={batch_tag}"
-    )
-    now = time.time()
-    base_pid = man["version"] * n_partitions
-    for r in sorted(stats, key=lambda r: r["__pid"]):
-        man["partitions"].append(
-            {
-                "partition_id": base_pid + r["__pid"],
-                "pid": int(r["__pid"]),
-                "batch": batch_tag,
-                "row_count": r["row_count"],
-                "key_min": r["key_min"],
-                "key_max": r["key_max"],
-                "checksum": r["checksum"],
-                "stage": stage,
-                "committed_at": now,
-            }
-        )
-    if not stats:
-        man["partitions"].append(
-            {
-                "partition_id": base_pid,
-                "pid": 0,
-                "batch": batch_tag,
-                "row_count": 0,
-                "key_min": None,
-                "key_max": None,
-                "checksum": 0,
-                "stage": stage,
-                "committed_at": now,
-            }
-        )
-    man["version"] += 1
-    # a conflicting concurrent commit (e.g. a compaction finishing during
-    # this micro-batch) raises ConcurrentCommitError → the streaming query
-    # fails and its restart REPLAYS the batch: the tag was never committed,
-    # the orphan data dir is GC'd, and the append is attempted again —
-    # exactly-once holds through the conflict
-    try:
-        _swap_manifest(root, table, man, expected_version=prev_version)
-    finally:
-        _clear_inflight(root, table, batch_tag)
-    return man
+    return _commit(df, root, table, man, tag=batch_tag, stage=stage)
 
 
 def rewrite_files(
@@ -541,8 +590,6 @@ def rewrite_files(
     *,
     sort_by_key: bool = True,
     files_per_partition: int = 1,
-    fail_before_swap: bool = False,
-    on_before_swap: Callable[[], None] | None = None,
 ) -> dict[str, Any]:
     """Iceberg ``rewrite_data_files`` analogue (round-5 verdict item 5):
     bin-pack ALL committed data files into ONE fresh batch directory with
@@ -558,8 +605,9 @@ def rewrite_files(
       * row/checksum identity — the rows are re-bucketed with the SAME
         committed partitioning (hash or the persisted range_bounds), and
         the new per-partition lineage stats come from reading back the
-        compacted files (``_batch_stats``), so the manifest can never
-        disagree with the data;
+        compacted files, so the manifest can never disagree with the data;
+        the commit core's row-conservation guard holds it to EXACTLY the
+        base manifest's row total;
       * pinned-reader isolation — older snapshots' batch directories stay
         referenced by their manifest files, which GC now consults
         (``_live_batches``), so ``read_table(as_of=N)`` is untouched until
@@ -568,15 +616,13 @@ def rewrite_files(
         ``retired_batches`` (carried forward forever), so a streaming
         checkpoint replaying a pre-compaction micro-batch stays a no-op;
       * crash safety — data is written before the manifest swap; a kill in
-        between leaves an orphan directory the next writer GCs
-        (``fail_before_swap`` injects it for tests);
+        between leaves an orphan directory the next writer GCs;
       * concurrent-writer safety — the final swap is a CAS against the
         base manifest's version: a snapshot committed DURING the (at
         100 TB, minutes-long) rewrite job — e.g. a streaming micro-batch
         append — makes the compaction lose with ``ConcurrentCommitError``
         instead of silently overwriting that snapshot and dropping its
-        rows; the caller re-runs the compaction over the fresh manifest
-        (``on_before_swap`` injects a concurrent commit for tests).
+        rows; the caller re-runs the compaction over the fresh manifest.
 
     ``sort_by_key`` (default on) is the Iceberg *sort-order rewrite*
     analogue: rows are sorted by ``key_col`` within each compacted file, so
@@ -611,111 +657,45 @@ def rewrite_files(
     # clear a prior crashed compaction (own prefix "c"); live streaming
     # appends' in-flight dirs stay shielded by their markers
     _gc_orphan_batches(root, table, man, own_prefixes=("c",))
-
     n = man["n_partitions"]
     key_col = man["key_col"]
-    bounds = man.get("range_bounds")
-    tag = f"c{man['version'] + 1}-{uuid.uuid4().hex[:8]}"
-    df = read_table(spark, root, table)
 
-    if bounds is not None:
-        pid_expr = F.lit(len(bounds))
-        for i in range(len(bounds) - 1, -1, -1):
-            pid_expr = F.when(
-                F.col(key_col) <= F.lit(bounds[i]), F.lit(i)
-            ).otherwise(pid_expr)
-        pid = pid_expr.cast("int")
-    else:
-        pid = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n)).cast("int")
-    staged = df.withColumn("__pid", pid).withColumn("__batch", F.lit(tag))
-    if files_per_partition == 1:
-        # one shuffle keyed on __pid: each partition's rows land in ONE
-        # task, so each pid directory holds exactly one compacted file
-        staged = staged.repartition(n, F.col("__pid"))
-    else:
-        # range shuffle on (pid, key): each task holds a contiguous
-        # (pid, key) slice, so every pid directory is cut into
-        # ~files_per_partition KEY-DISJOINT files — footer min/max stats
-        # then prune whole files, the tier above row groups.  The range
-        # partitioner samples the input (one extra job) and balances
-        # skewed keys by construction; this is the path for tables whose
-        # partitions outgrow a sane parquet file size.
-        staged = staged.repartitionByRange(
-            n * files_per_partition, F.col("__pid"), F.col(key_col)
-        )
-    if sort_by_key:
-        # sort (pid, key) within each task: hash collisions can co-locate
-        # two pids in one task, and the leading __pid keeps each output
-        # file's rows contiguous AND key-sorted
-        staged = staged.sortWithinPartitions("__pid", key_col)
-    _mark_inflight(root, table, tag)
-    staged.write.mode("append").partitionBy("__batch", "__pid").parquet(
-        _data_dir(root, table)
-    )
-    if fail_before_swap:
-        raise RuntimeError(
-            f"injected failure after compacted write of {tag!r}, before "
-            "manifest swap (compaction crash-window test)"
-        )
-    if on_before_swap is not None:
-        on_before_swap()  # test hook: a concurrent commit in the CAS window
-    stats = _batch_stats(df, key_col, f"{_data_dir(root, table)}/__batch={tag}")
-    # row conservation: compaction must re-commit EXACTLY the base
-    # manifest's rows.  The stats come from reading back the compacted
-    # files, so any loss — a concurrent GC deleting the in-flight dir, a
-    # partial write, a partitioning bug — surfaces here as a loud abort
-    # instead of a committed manifest that silently shrank the table.
-    base_rows = sum(rec["row_count"] for rec in man["partitions"])
-    compacted_rows = sum(r["row_count"] for r in stats)
-    if compacted_rows != base_rows:
-        _clear_inflight(root, table, tag)
-        raise RuntimeError(
-            f"compaction of {table!r} read back {compacted_rows} rows but "
-            f"the base manifest (v{man['version']}) committed {base_rows}; "
-            "aborting without commit (row-conservation guard)"
-        )
-    by_pid = {int(r["__pid"]): r for r in stats}
-    now = time.time()
-    base_pid = man["version"] * n if _writer_kind(man) == "append" else 0
-    recs = []
-    for p in range(n):
-        r = by_pid.get(p)
-        if r is None and _writer_kind(man) == "append":
-            continue  # append tables don't track empty pids per batch
-        recs.append(
-            {
-                "partition_id": base_pid + p,
-                "pid": p,
-                "batch": tag,
-                "row_count": r["row_count"] if r else 0,
-                "key_min": r["key_min"] if r else None,
-                "key_max": r["key_max"] if r else None,
-                "checksum": r["checksum"] if r else 0,
-                "stage": "compact",
-                "committed_at": now,
-            }
-        )
-    if not recs:  # an entirely-empty committed table still commits the tag
-        recs.append(
-            {
-                "partition_id": base_pid, "pid": 0, "batch": tag,
-                "row_count": 0, "key_min": None, "key_max": None,
-                "checksum": 0, "stage": "compact", "committed_at": now,
-            }
-        )
+    def arrange(staged: DataFrame) -> DataFrame:
+        if files_per_partition == 1:
+            # one shuffle keyed on __pid: each partition's rows land in ONE
+            # task, so each pid directory holds exactly one compacted file
+            staged = staged.repartition(n, F.col("__pid"))
+        else:
+            # range shuffle on (pid, key): each task holds a contiguous
+            # (pid, key) slice, so every pid directory is cut into
+            # ~files_per_partition KEY-DISJOINT files — footer min/max
+            # stats then prune whole files, the tier above row groups.
+            # The range partitioner samples the input (one extra job) and
+            # balances skewed keys by construction.
+            staged = staged.repartitionByRange(
+                n * files_per_partition, F.col("__pid"), F.col(key_col)
+            )
+        if sort_by_key:
+            # sort (pid, key) within each task: hash collisions can
+            # co-locate two pids in one task, and the leading __pid keeps
+            # each output file's rows contiguous AND key-sorted
+            staged = staged.sortWithinPartitions("__pid", key_col)
+        return staged
+
     retired = sorted(
         set(man.get("retired_batches", []))
         | {rec.get("batch") for rec in man["partitions"] if rec.get("batch")}
     )
-    new_man = dict(man)
-    new_man["version"] = man["version"] + 1
-    new_man["partitions"] = recs
-    new_man["retired_batches"] = retired
-    try:
-        _swap_manifest(root, table, new_man, expected_version=man["version"])
-    finally:
-        _clear_inflight(root, table, tag)
-    return new_man
+    return _commit(
+        read_table(spark, root, table),
+        root,
+        table,
+        dict(man, writer=_writer_kind(man), partitions=[], retired_batches=retired),
+        tag=f"c{man['version'] + 1}-{uuid.uuid4().hex[:8]}",
+        stage="compact",
+        arrange=arrange,
+        expected_rows=sum(rec["row_count"] for rec in man["partitions"]),
+    )
 
 
 def expire_snapshots(
@@ -901,10 +881,9 @@ def manifest_at(root: str, table: str, version: int) -> dict[str, Any]:
 def read_table(
     spark: SparkSession, root: str, table: str, as_of: int | None = None
 ) -> DataFrame:
-    """Read only COMMITTED data: manifest-listed batch directories, pruned
-    further to committed partition ids (both are partition columns, so the
-    filters prune at the file-listing level — orphan batches are never
-    touched).
+    """Read only COMMITTED data: only manifest-listed batch directories
+    are listed, pruned further to committed partition ids (``_scan``) —
+    orphan and in-flight batches are never touched.
 
     ``as_of=<version>`` time-travels to that snapshot (Iceberg
     ``VERSION AS OF`` semantics): the reader binds to manifest v{N}'s
@@ -918,22 +897,11 @@ def read_table(
     consults every committed snapshot's manifest — not just the head —
     so a batch stays on disk until ``expire_snapshots`` drops the last
     manifest that references it."""
-    man = (
-        current_manifest(root, table)
-        if as_of is None
-        else manifest_at(root, table, as_of)
-    )
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest for {table} under {root}")
-    cond = _committed_batch_pid_filter(man)
-    if cond is None or not os.path.isdir(_data_dir(root, table)):
-        # no committed batches, or every committed batch was empty (an
-        # empty micro-batch commits its tag but writes no files)
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame([], StructType.fromDDL(man["schema"]))
-    base = spark.read.parquet(_data_dir(root, table))
-    return base.filter(cond).drop("__batch", "__pid")
+    man = _read_manifest(root, table, as_of)
+    base = _scan(spark, root, table, _all_pairs(man))
+    if base is None:  # no committed batch has files
+        return _empty(spark, man)
+    return base.drop("__batch", "__pid")
 
 
 def partitions_for_range(
@@ -968,44 +936,21 @@ def read_range(
     file-pruning index — the payoff of range-partitioning on the
     Hilbert-ordered S2 id space (north star: contiguous id ranges are
     spatially contiguous).  Only partitions whose committed
-    [key_min, key_max] overlaps [lo, hi] are listed; ``__batch``/``__pid``
-    are partition columns, so the isin filters prune at file-listing time
-    and non-overlapping partition directories are never opened.  The exact
-    residual key predicate then applies on the survivors.
+    [key_min, key_max] overlaps [lo, hi] are scanned (``_scan``: only
+    their batch directories are listed and the (batch, pid) filter prunes
+    at file-listing time, so non-overlapping partition directories are
+    never opened).  The exact residual key predicate then applies on the
+    survivors.
 
     ``as_of=<version>`` prunes against snapshot vN's manifest instead
     (same time-travel semantics as ``read_table``)."""
-    man = (
-        current_manifest(root, table)
-        if as_of is None
-        else manifest_at(root, table, as_of)
-    )
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest for {table} under {root}")
-    key_col = man["key_col"]
-    sel = partitions_for_range(man, lo, hi)
-    if not sel:
-        # schema-stable empty result straight from the manifest — no
-        # filesystem touch (an all-empty committed table has a manifest
-        # but may have no parquet files at all)
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame([], StructType.fromDDL(man["schema"]))
-    base = spark.read.parquet(_data_dir(root, table))
-    # per-batch pid sets: files carry RAW __pid, and distinct batches may
-    # reuse the same pid values — the filter must pair them (round-4
-    # advice: a flat isin over namespaced ids dropped appended batches)
-    by_batch: dict[str, set[int]] = {}
-    for p, b in sel:
-        if b:
-            by_batch.setdefault(b, set()).add(p)
-    cond = None
-    for b in sorted(by_batch):
-        c = (F.col("__batch") == b) & F.col("__pid").isin(sorted(by_batch[b]))
-        cond = c if cond is None else (cond | c)
-    key = F.col(key_col).cast("bigint")
+    man = _read_manifest(root, table, as_of)
+    base = _scan(spark, root, table, partitions_for_range(man, lo, hi))
+    if base is None:  # no overlapping partition holds files
+        return _empty(spark, man)
+    key = F.col(man["key_col"]).cast("bigint")
     return (
-        base.filter(cond & (key >= F.lit(int(lo))) & (key <= F.lit(int(hi))))
+        base.filter((key >= F.lit(int(lo))) & (key <= F.lit(int(hi))))
         .drop("__batch", "__pid")
     )
 
@@ -1057,32 +1002,16 @@ def verify_table(
     ``unexpected_rows`` — manifest says empty but files hold rows; or the
     disagreeing field ``row_count``/``key_min``/``key_max``/``checksum``)
     plus the expected and observed values."""
-    man = (
-        current_manifest(root, table)
-        if as_of is None
-        else manifest_at(root, table, as_of)
-    )
-    if man is None:
-        raise FileNotFoundError(f"no committed manifest for {table} under {root}")
-    n = man["n_partitions"]
-    expected = {(rec["batch"], _rec_pid(rec, n)): rec for rec in man["partitions"]}
+    man = _read_manifest(root, table, as_of)
+    pairs = _all_pairs(man)
+    expected = {(b, p): rec for (p, b), rec in zip(pairs, man["partitions"])}
 
     observed: dict[tuple, Any] = {}
-    cond = _committed_batch_pid_filter(man)
-    if cond is not None and os.path.isdir(_data_dir(root, table)):
-        base = spark.read.parquet(_data_dir(root, table)).filter(cond)
-        # checksum over the DATA columns in file-schema order — the same
-        # expression _batch_stats committed (xxhash64 is column-order
-        # sensitive; __batch/__pid are directory-derived, not data)
+    base = _scan(spark, root, table, pairs)
+    if base is not None:
         data_cols = [c for c in base.columns if c not in ("__batch", "__pid")]
-        key = F.col(man["key_col"]).cast("bigint")
         stats = base.groupBy("__batch", "__pid").agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.min(key).alias("key_min"),
-            F.max(key).alias("key_max"),
-            F.expr("bit_xor(xxhash64(" + ", ".join(data_cols) + "))").alias(
-                "checksum"
-            ),
+            *_stats_aggs(data_cols, man["key_col"])
         )
         observed = {
             (r["__batch"], int(r["__pid"])): r for r in stats.collect()

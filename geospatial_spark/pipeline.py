@@ -90,7 +90,6 @@ def run(
     *,
     n_partitions: int = 16,
     batch_size: int = 4,
-    fail_after_batches: int | None = None,
 ) -> dict:
     """Execute all stages with lineage; returns {stage: manifest}."""
     s2c = udfs.s2_cell_udf(S2_LEVEL)
@@ -107,7 +106,6 @@ def run(
         stage="extract_geocode",
         key_col="s2_cell",
         batch_size=batch_size,
-        fail_after_batches=fail_after_batches,
         range_bounds=bounds,
     )
 

@@ -41,6 +41,44 @@ def spark():
     shutil.rmtree(_WAREHOUSE, ignore_errors=True)
 
 
+@pytest.fixture()
+def inject_fault(monkeypatch):
+    """Arm icelite's ``FAULT_HOOK`` for one shot.
+
+    ``inject_fault(point, skip=k, table=None, prefix="", action=None)``
+    fires at the (k+1)-th commit reaching ``point`` ("before_write",
+    "after_write" or "after_swap") whose table matches ``table`` (any when
+    None) and whose batch tag starts with ``prefix``, then disarms — so a
+    rerun in the same test runs clean.  Firing calls ``action(tag)`` when
+    given, else raises ``RuntimeError("injected failure ...")``: a kill of
+    the writer at that point."""
+    from geospatial_spark.icelite import catalog as ice
+
+    def arm(point, *, skip=0, table=None, prefix="", action=None):
+        left = [skip]
+
+        def hook(p, t, tag):
+            if left[0] < 0 or p != point or not tag.startswith(prefix):
+                return
+            if table is not None and t != table:
+                return
+            if left[0] > 0:
+                left[0] -= 1
+                return
+            left[0] = -1
+            if action is not None:
+                action(tag)
+                return
+            where = " (data written, before manifest swap)" * (p == "after_write")
+            raise RuntimeError(
+                f"injected failure at {p} of {t!r} batch {tag!r}{where}"
+            )
+
+        monkeypatch.setattr(ice, "FAULT_HOOK", hook)
+
+    return arm
+
+
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """Mimic the driver's oracle: base tables pre-registered as views."""
     con = duckdb.connect()

@@ -98,3 +98,36 @@ def test_corpus_pipeline_rerun_is_deterministic(spark, workdir):
         for r in ice.read_table(spark, b, "audit").collect()
     )
     assert ra == rb
+
+
+def test_corpus_killed_between_table_commits_then_rerun(
+    spark, workdir, inject_fault
+):
+    """run_corpus commits ``corpus``, then ``audit``.  A kill between the
+    two commits leaves corpus complete and audit absent; the rerun must
+    keep the committed corpus (no new snapshot) and reach the same table
+    pair as an uncrashed run, lineage and rows alike."""
+    ref, got = f"{workdir}/ref", f"{workdir}/got"
+    pipeline.run_corpus(spark, SF, ref, n_partitions=4)
+    inject_fault("before_write", table="audit")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        pipeline.run_corpus(spark, SF, got, n_partitions=4)
+    assert ice.current_manifest(got, "audit") is None
+    corpus_v = ice.current_manifest(got, "corpus")["version"]
+
+    pipeline.run_corpus(spark, SF, got, n_partitions=4)
+    assert ice.current_manifest(got, "corpus")["version"] == corpus_v
+    for t in ("corpus", "audit"):
+        lin = [
+            sorted(
+                (r["partition_id"], r["row_count"], r["checksum"])
+                for r in ice.lineage(spark, root, t).collect()
+            )
+            for root in (ref, got)
+        ]
+        assert lin[0] == lin[1] and sum(n for _, n, _ in lin[0]) > 0
+        rows = [
+            sorted(tuple(r) for r in ice.read_table(spark, root, t).collect())
+            for root in (ref, got)
+        ]
+        assert rows[0] == rows[1]

@@ -277,15 +277,16 @@ def test_rewrite_files_per_partition_splits_key_disjoint(spark, workdir):
         ice.rewrite_files(spark, workdir, "t", files_per_partition=0)
 
 
-def test_rewrite_crash_window_then_retry(spark, workdir):
+def test_rewrite_crash_window_then_retry(spark, workdir, inject_fault):
     df = _src(spark)
     ice.write_partitioned(
         df, workdir, "t", stage="s1", key_col="key", n_partitions=4, batch_size=1
     )
     before = _rows(ice.read_table(spark, workdir, "t"))
     v = ice._version_pointer(workdir, "t")
+    inject_fault("after_write", prefix="c")
     with pytest.raises(RuntimeError, match="injected failure"):
-        ice.rewrite_files(spark, workdir, "t", fail_before_swap=True)
+        ice.rewrite_files(spark, workdir, "t")
     # data written, manifest not swapped: readers see the old snapshot only
     assert ice._version_pointer(workdir, "t") == v
     assert _rows(ice.read_table(spark, workdir, "t")) == before
@@ -352,7 +353,9 @@ def test_swap_manifest_cas_rejects_stale_base_version(workdir):
     assert ice._version_pointer(workdir, "t") == 2
 
 
-def test_concurrent_append_during_rewrite_cas_loses_nothing(spark, workdir):
+def test_concurrent_append_during_rewrite_cas_loses_nothing(
+    spark, workdir, inject_fault
+):
     """The lost-update window (r5 self-found; same contract class as the
     r4 no-loss advice): a streaming micro-batch committing DURING a
     (minutes-long at scale) compaction job must survive.  Before the CAS,
@@ -371,14 +374,17 @@ def test_concurrent_append_during_rewrite_cas_loses_nothing(spark, workdir):
         )
     before = _rows(ice.read_table(spark, workdir, "t"))
 
-    def concurrent_append():
+    def concurrent_append(_tag):
         ice.append_batch(
             c, workdir, "t", stage="ing", key_col="key",
             n_partitions=4, batch_tag="sb2",
         )
 
+    # a concurrent commit lands in the CAS window: after the compacted
+    # write, before the compaction's manifest swap
+    inject_fault("after_write", prefix="c", action=concurrent_append)
     with pytest.raises(ice.ConcurrentCommitError, match="concurrent writer"):
-        ice.rewrite_files(spark, workdir, "t", on_before_swap=concurrent_append)
+        ice.rewrite_files(spark, workdir, "t")
     # the concurrently-committed micro-batch survived, nothing was lost
     got = _rows(ice.read_table(spark, workdir, "t"))
     assert set(before) <= set(got)
@@ -398,7 +404,7 @@ def test_concurrent_append_during_rewrite_cas_loses_nothing(spark, workdir):
     assert len(_rows(ice.read_table(spark, workdir, "t"))) == df.count()
 
 
-def test_gc_shields_inflight_foreign_batch(spark, workdir):
+def test_gc_shields_inflight_foreign_batch(spark, workdir, inject_fault):
     """A writer's start-of-run orphan GC must NOT delete another writer's
     in-flight (marked, uncommitted) batch directory — only its own writer
     family's crashed attempts, or markers past the TTL."""
@@ -410,10 +416,11 @@ def test_gc_shields_inflight_foreign_batch(spark, workdir):
         batch_tag="sb0",
     )
     # an append killed between data write and swap: dir + live marker stay
+    inject_fault("after_write", prefix="sb1")
     with pytest.raises(RuntimeError, match="injected failure"):
         ice.append_batch(
             b, workdir, "t", stage="ing", key_col="key", n_partitions=4,
-            batch_tag="sb1", fail_before_swap=True,
+            batch_tag="sb1",
         )
     inflight_dir = os.path.join(workdir, "t", "data", "__batch=sb1")
     assert os.path.isdir(inflight_dir)
@@ -427,10 +434,11 @@ def test_gc_shields_inflight_foreign_batch(spark, workdir):
     )
     assert len(_rows(ice.read_table(spark, workdir, "t"))) == df.count()
     # an expired marker no longer shields: TTL=0 → any writer's GC reclaims
+    inject_fault("after_write", prefix="sb9")
     with pytest.raises(RuntimeError, match="injected failure"):
         ice.append_batch(
             b, workdir, "t", stage="ing", key_col="key", n_partitions=4,
-            batch_tag="sb9", fail_before_swap=True,
+            batch_tag="sb9",
         )
     stale = os.path.join(workdir, "t", "data", "__batch=sb9")
     assert os.path.isdir(stale)
@@ -443,7 +451,7 @@ def test_gc_shields_inflight_foreign_batch(spark, workdir):
     assert not os.path.isdir(stale)
 
 
-def test_rewrite_row_conservation_guard(spark, workdir):
+def test_rewrite_row_conservation_guard(spark, workdir, inject_fault):
     """If the compacted files vanish (or shrink) between the write and the
     commit — the GC-race / partial-write class — the rewrite must abort
     loudly instead of committing a manifest that silently emptied the
@@ -455,12 +463,13 @@ def test_rewrite_row_conservation_guard(spark, workdir):
     )
     before = _rows(ice.read_table(spark, workdir, "t"))
 
-    def sabotage():
+    def sabotage(_tag):
         for d in glob.glob(f"{workdir}/t/data/__batch=c*"):
             shutil.rmtree(d)
 
+    inject_fault("after_write", prefix="c", action=sabotage)
     with pytest.raises(RuntimeError, match="row-conservation"):
-        ice.rewrite_files(spark, workdir, "t", on_before_swap=sabotage)
+        ice.rewrite_files(spark, workdir, "t")
     # nothing committed: table unchanged, version unchanged, retry works
     assert _rows(ice.read_table(spark, workdir, "t")) == before
     man = ice.rewrite_files(spark, workdir, "t")

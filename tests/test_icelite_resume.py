@@ -28,7 +28,7 @@ def _src(spark):
     )
 
 
-def test_kill_and_resume(spark, workdir):
+def test_kill_and_resume(spark, workdir, inject_fault):
     df = _src(spark)
 
     # uninterrupted reference run
@@ -39,16 +39,11 @@ def test_kill_and_resume(spark, workdir):
     ref_rows = sorted(ref.collect(), key=lambda r: r["doc_id"])
 
     # killed run: crashes after committing 2 of 4 batches
+    inject_fault("before_write", skip=2)
     with pytest.raises(RuntimeError, match="injected failure"):
         ice.write_partitioned(
-            df,
-            workdir,
-            "t",
-            stage="s1",
-            key_col="key",
-            n_partitions=8,
+            df, workdir, "t", stage="s1", key_col="key", n_partitions=8,
             batch_size=2,
-            fail_after_batches=2,
         )
     committed_before = ice.committed_partitions(workdir, "t")
     assert len(committed_before) == 4  # 2 batches x 2 partitions
@@ -96,7 +91,7 @@ def test_rerun_is_noop(spark, workdir):
     assert len(man2["partitions"]) == 4
 
 
-def test_crash_window_orphan_ignored(spark, workdir):
+def test_crash_window_orphan_ignored(spark, workdir, inject_fault):
     """Kill BETWEEN the batch data write and the manifest swap (the round-1
     untested window): the orphan batch dir must be invisible to readers and
     the resumed run must produce exactly the reference rows (no dup rows
@@ -109,10 +104,11 @@ def test_crash_window_orphan_ignored(spark, workdir):
         ice.read_table(spark, workdir, "ref").collect(), key=lambda r: r["doc_id"]
     )
 
+    inject_fault("after_write", skip=1)
     with pytest.raises(RuntimeError, match="before manifest swap"):
         ice.write_partitioned(
             df, workdir, "t", stage="s1", key_col="key", n_partitions=8,
-            batch_size=2, fail_mid_commit=1,
+            batch_size=2,
         )
     # one batch committed, one orphaned on disk
     assert len(ice.committed_partitions(workdir, "t")) == 2
@@ -129,14 +125,15 @@ def test_crash_window_orphan_ignored(spark, workdir):
     assert got == ref_rows  # orphan rows did NOT leak in
 
 
-def test_resume_partitioning_mismatch_raises(spark, workdir):
+def test_resume_partitioning_mismatch_raises(spark, workdir, inject_fault):
     """Round-2 advice: resuming with a different partitioning than the
     manifest committed must raise, not silently mis-assign remaining rows."""
     df = _src(spark)
+    inject_fault("before_write", skip=1)
     with pytest.raises(RuntimeError, match="injected failure"):
         ice.write_partitioned(
             df, workdir, "h", stage="s1", key_col="key", n_partitions=8,
-            batch_size=2, fail_after_batches=1,
+            batch_size=2,
         )
     # hash-committed + range requested → raise
     with pytest.raises(ValueError, match="committed partitioning is hash"):
@@ -157,14 +154,15 @@ def test_resume_partitioning_mismatch_raises(spark, workdir):
     assert len(man["partitions"]) == 8
 
 
-def test_range_bounds_persisted_on_resume(spark, workdir):
+def test_range_bounds_persisted_on_resume(spark, workdir, inject_fault):
     """Resume must reuse the COMMITTED range bounds even when the caller
     passes different (recomputed/drifted) bounds."""
     df = _src(spark)
+    inject_fault("before_write", skip=1)
     with pytest.raises(RuntimeError, match="injected failure"):
         ice.write_partitioned(
             df, workdir, "t", stage="s1", key_col="key", batch_size=1,
-            fail_after_batches=1, range_bounds=[100, 250],
+            range_bounds=[100, 250],
         )
     man = ice.write_partitioned(
         df, workdir, "t", stage="s1", key_col="key", batch_size=2,
@@ -252,7 +250,7 @@ def test_read_range_pushes_key_bounds_to_parquet(spark, workdir):
     assert part and "__batch" in part[0] and "__pid" in part[0], part
 
 
-def test_schema_drift_refused(spark, workdir):
+def test_schema_drift_refused(spark, workdir, inject_fault):
     """icelite tables are schema-frozen (documented divergence from
     Iceberg's id-based evolution): an append or resume whose DataFrame
     schema differs from the committed one would land mixed-schema parquet
@@ -281,10 +279,11 @@ def test_schema_drift_refused(spark, workdir):
     )
     assert man["version"] == 1
 
+    inject_fault("before_write", skip=1)
     with _pt.raises(RuntimeError, match="injected failure"):
         ice.write_partitioned(
             df, workdir, "tb", stage="s1", key_col="key", n_partitions=4,
-            batch_size=2, fail_after_batches=1,
+            batch_size=2,
         )
     with _pt.raises(ValueError, match="schema-frozen"):
         ice.write_partitioned(

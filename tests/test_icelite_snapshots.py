@@ -68,15 +68,18 @@ def test_every_batch_commit_is_a_snapshot(spark, workdir):
     assert len(v2_rows) == sum(rec["row_count"] for rec in man2["partitions"])
 
 
-def test_pinned_read_isolated_from_concurrent_commit_and_gc(spark, workdir):
+def test_pinned_read_isolated_from_concurrent_commit_and_gc(
+    spark, workdir, inject_fault
+):
     """The load-bearing Iceberg property after resume: a reader pinned to
     snapshot N sees identical rows while batch N+1 commits — including the
     orphan GC the next writer runs before its first batch."""
     df = _src(spark)
+    inject_fault("before_write", skip=2)
     with pytest.raises(RuntimeError, match="injected failure"):
         ice.write_partitioned(
             df, workdir, "t", stage="s1", key_col="key", n_partitions=8,
-            batch_size=2, fail_after_batches=2,
+            batch_size=2,
         )
     v = ice.current_manifest(workdir, "t")["version"]
     assert v == 2
@@ -129,14 +132,15 @@ def test_unswapped_manifest_is_not_a_snapshot(spark, workdir):
     assert ice.read_table(spark, workdir, "t").count() == df.count()
 
 
-def test_read_range_and_lineage_as_of(spark, workdir):
+def test_read_range_and_lineage_as_of(spark, workdir, inject_fault):
     """read_range/lineage time-travel: pruning bounds and metrics come
     from the pinned snapshot's manifest, not the head."""
     df = _src(spark)
+    inject_fault("before_write", skip=2)
     with pytest.raises(RuntimeError, match="injected failure"):
         ice.write_partitioned(
             df, workdir, "t", stage="s1", key_col="key", batch_size=1,
-            fail_after_batches=2, range_bounds=[100, 250],
+            range_bounds=[100, 250],
         )
     v = ice.current_manifest(workdir, "t")["version"]
     ice.write_partitioned(

@@ -12,12 +12,12 @@ from geospatial_spark.icelite import catalog as ice
 SF = "/root/testdata/sf0.001"
 
 
-def test_pipeline_kill_resume_and_range_lineage(spark, tmp_path):
+def test_pipeline_kill_resume_and_range_lineage(spark, tmp_path, inject_fault):
     out = str(tmp_path)
+    # killed before the third batch of the first stage
+    inject_fault("before_write", skip=2, table="points")
     with pytest.raises(RuntimeError, match="injected failure"):
-        pipeline.run(
-            spark, SF, out, n_partitions=8, batch_size=2, fail_after_batches=2
-        )
+        pipeline.run(spark, SF, out, n_partitions=8, batch_size=2)
     # stage 1 partially committed, later stages untouched
     assert len(ice.committed_partitions(out, "points")) == 4
     assert ice.current_manifest(out, "joined") is None

@@ -152,6 +152,24 @@ def test_pandas_backed_mixed_scalar_args(sql_spark):
     assert all(r["v"] == 6 for r in tok)
 
 
+def test_pandas_backed_null_level_is_null(sql_spark):
+    """A NULL level/precision is a NULL result (SQL semantics), never a
+    silent cell 0 — also when it shares an Arrow batch with real levels."""
+    rows = sql_spark.sql(
+        """SELECT id,
+                  gs_s2_cell(lat, lon, CAST(NULL AS INT)) IS NULL AS cell_null,
+                  gs_s2_parent(gs_s2_cell(lat, lon, 10), CAST(NULL AS INT))
+                      IS NULL AS parent_null,
+                  gs_geohash(lat, lon, CAST(NULL AS INT)) IS NULL AS gh_null,
+                  gs_s2_cell(lat, lon, IF(id % 2 = 0, NULL, 10)) AS mixed,
+                  gs_s2_cell(lat, lon, 10) AS cell10
+           FROM sqlreg_pts"""
+    ).collect()
+    assert all(r["cell_null"] and r["parent_null"] and r["gh_null"] for r in rows)
+    for r in rows:
+        assert r["mixed"] == (None if r["id"] % 2 == 0 else r["cell10"])
+
+
 def test_url_host_registrable_domain_parity(sql_spark):
     """gs_url_host / gs_registrable_domain vs their Column-builder twins
     (operators/domains.py) over the goldens from tests/test_domains.py plus

@@ -188,7 +188,7 @@ def test_append_batch_replay_is_noop(spark, tmp_path):
     assert ice.read_table(spark, root, "t").count() == 100
 
 
-def test_append_batch_crash_window_retry_no_dup(spark, tmp_path):
+def test_append_batch_crash_window_retry_no_dup(spark, tmp_path, inject_fault):
     """Crash AFTER the data write, BEFORE the manifest swap: the retry must
     GC the orphan and land exactly one copy of the rows."""
     df = spark.read.parquet(f"{SF}/events.parquet").limit(100)
@@ -197,10 +197,11 @@ def test_append_batch_crash_window_retry_no_dup(spark, tmp_path):
         df, root, "t", stage="s", key_col="event_id", n_partitions=4,
         batch_tag="sb0",
     )
+    inject_fault("after_write", prefix="sb1")
     with pytest.raises(RuntimeError, match="before manifest swap"):
         ice.append_batch(
             df, root, "t", stage="s", key_col="event_id", n_partitions=4,
-            batch_tag="sb1", fail_before_swap=True,
+            batch_tag="sb1",
         )
     # reader never sees the orphan
     assert ice.read_table(spark, root, "t").count() == 100
